@@ -227,44 +227,9 @@ def _pairs_from_shingle_rows(
 _MH_PRIME = (1 << 31) - 1  # Mersenne prime 2^31-1
 
 
-def _minhash_sig(
-    shingles: F.Column, k: int, seed: int = 42, hash_mode: str = "xxhash64"
-) -> F.Column:
-    """k-permutation MinHash signature (array<bigint>), all JVM-side:
-    shingle id x = hash64(shingle) mod p; h_i(x) = (a_i*x + b_i) mod p.
-    a_i < 2^20 and x < 2^31 keep a*x + b < 2^52 — no signed-long overflow
-    in the JVM expression (overflow would silently wrap and break
-    determinism claims). hash_mode='portable' uses the md5-derived 60-bit
-    hash so DuckDB can replay the identical chain (oracle checking)."""
-    # Spark cannot common-subexpression-eliminate across lambda scopes, so
-    # k separate `array_min(transform(...))` expressions would recompute the
-    # shingle array and its hashes k times. Instead: ONE fold over the
-    # shingle-hash array, keeping a running elementwise minimum of all k
-    # permutation hashes (zip_with + least). Everything evaluates once.
-    a_list, b_list = _perm_consts(k, seed)
-    a_consts = F.array(*[F.lit(a) for a in a_list])
-    b_consts = F.array(*[F.lit(b) for b in b_list])
-    xs = F.transform(
-        shingles, lambda s: F.pmod(_hash64(s, hash_mode), F.lit(_MH_PRIME))
-    )
-    return F.aggregate(
-        xs,
-        F.array_repeat(F.lit(_MH_PRIME).cast("long"), k),
-        lambda acc, x: F.zip_with(
-            acc,
-            F.sequence(F.lit(1), F.lit(k)),
-            lambda m, i: F.least(
-                m,
-                F.pmod(
-                    x * F.element_at(a_consts, i) + F.element_at(b_consts, i),
-                    F.lit(_MH_PRIME),
-                ),
-            ),
-        ),
-    )
-
-
 def _perm_consts(k: int, seed: int) -> tuple[list[int], list[int]]:
+    # a_i < 2^20 and x < 2^31 keep a*x + b < 2^52: no signed-long
+    # overflow in the JVM expression (it would silently wrap)
     a = [((seed * 1_000_003 + i * 2_654_435_761 + 1) % (1 << 20)) | 1 for i in range(k)]
     b = [(seed * 97 + i * 1_234_567_891) % _MH_PRIME for i in range(k)]
     return a, b
@@ -279,7 +244,7 @@ def minhash_signatures(
     seed: int = 42,
     hash_mode: str = "xxhash64",
 ) -> DataFrame:
-    """Per-doc MinHash signature (pure JVM single-fold). Docs with no
+    """Per-doc MinHash signature (pure JVM). Docs with no
     shingles (< n words) are dropped: their signature would be the
     degenerate all-p init vector, which band-matches every other empty
     doc.
@@ -302,14 +267,13 @@ def _sigs_from_shingled(
     """Signatures from a frame that already carries the shingle array —
     the ``dedup_pipeline`` entry point (shared tokenization).
 
-    Computed as explode + k codegen ``min`` aggregates rather than the
-    single-fold array walk (``_minhash_sig``): higher-order functions
-    evaluate INTERPRETED per element, so the fold pays ~k boxed lambda
-    evaluations per shingle, while ``min(pmod(x*a_i+b_i, p))`` is
-    whole-stage-codegen over primitive longs. Same values exactly — both
-    compute min over the identical (a_i*x+b_i) mod p family, and docs
-    with zero shingles drop on both paths (explode emits nothing; the
-    fold path filtered size > 0). Measured 5.8x on the sf1 corpus
+    Computed as explode + k codegen ``min`` aggregates rather than a
+    single ``aggregate``/``zip_with`` fold over the shingle array:
+    higher-order functions evaluate INTERPRETED per element, so such a
+    fold pays ~k boxed lambda evaluations per shingle, while
+    ``min(pmod(x*a_i+b_i, p))`` is whole-stage-codegen over primitive
+    longs. Docs with zero shingles drop here because explode emits
+    nothing for them. Measured 5.8x over the fold on the sf1 corpus
     (OPTIMIZATION_r06.md)."""
     rows = shingled.select(F.col(key), F.explode(shcol).alias("_s"))
     a_list, b_list = _perm_consts(k, seed)

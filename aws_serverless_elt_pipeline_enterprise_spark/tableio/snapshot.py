@@ -14,17 +14,16 @@ visible semantics Iceberg would give us:
                               rename. Readers never see a partial commit.
   * optimistic concurrency  — two writers racing for the same version:
                               exactly one wins the claim; the loser gets
-                              ``CommitConflictError`` and the merge paths
-                              rebase-and-retry (MOR deltas always rebase;
-                              COW rebases only when the intervening
-                              commits did not touch its read set,
-                              otherwise the conflict propagates and the
-                              caller re-runs the merge against fresh
-                              state — Iceberg's validation semantics).
-                              Compactions rebase over concurrent MOR
-                              appends too (the live-stream + scheduled-
-                              rewrite deployment); bucket-map conflicts
-                              raise and the maintenance op is re-run.
+                              ``CommitConflictError``. Every writer
+                              commits through ONE loop,
+                              ``SnapshotTable._commit_optimistic``, which
+                              rebases the loser onto the winner when the
+                              op's rebase rule allows it (MOR deltas and
+                              compactions over appends do; a COW merge
+                              whose read set changed does not) and
+                              otherwise lets the conflict propagate so
+                              the caller re-runs the op against fresh
+                              state — Iceberg's validation semantics.
   * epoch-idempotent commit — each manifest carries the cumulative set of
                               committed epoch IDs; re-merging an already
                               committed epoch is a no-op. This translates
@@ -70,16 +69,21 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# Optimistic-commit budget: a writer that loses the manifest version
+# claim this many times in a row gives up with CommitConflictError.
+COMMIT_ATTEMPTS = 16
+
+
 class CommitConflictError(Exception):
     """Another writer claimed this manifest version first.
 
     Raised by ``_commit_manifest`` when the exclusive version-file claim
-    fails. MOR appends catch it and rebase automatically (a global delta
-    is position-independent); COW merges rebase only when the conflicting
-    commits did not change their read set, otherwise the error propagates
-    with the epoch UNCOMMITTED — the data dir is an unreferenced orphan
-    (vacuumable by ``expire_orphans``) and re-running the merge against
-    fresh state is safe and converges.
+    fails; ``SnapshotTable._commit_optimistic`` catches it and rebases or
+    re-raises according to the op's rebase rule (listed there), and
+    raises it after ``COMMIT_ATTEMPTS`` lost claims. When it escapes, the
+    op is UNCOMMITTED — its data dir is an unreferenced orphan (vacuumable
+    by ``expire_orphans``) and re-running it against fresh state is safe
+    and converges.
     """
 
 
@@ -253,6 +257,23 @@ def conform(df: DataFrame, schema: T.StructType) -> DataFrame:
     return df.select(*cols)
 
 
+def _schema_of(m: dict) -> T.StructType:
+    """A manifest's table schema."""
+    return T.StructType.fromJson(json.loads(m["schema"]))
+
+
+def _live_dirs(m: dict) -> set[str]:
+    """Every commit dir a manifest references."""
+    return {d for dirs in m["buckets"].values() for d in dirs} | set(
+        m.get("global_deltas", [])
+    )
+
+
+def _next_version(m: dict | None) -> int:
+    """The version a commit on top of manifest ``m`` claims."""
+    return m["version"] + 1 if m else 0
+
+
 def _du_parquet(path: str) -> int:
     """Total parquet bytes under a dir (one os.walk of THAT dir only)."""
     total = 0
@@ -380,6 +401,23 @@ class SnapshotTable:
     def _latest_path(self) -> str:
         return os.path.join(self.root, "LATEST")
 
+    def _latest_hint(self) -> int:
+        try:
+            with open(self._latest_path()) as f:
+                return int(f.read().strip().lstrip("v"))
+        except FileNotFoundError:
+            return -1
+
+    def _advance_latest(self, version: int) -> None:
+        """Move the LATEST hint up to ``version`` by atomic rename; never
+        backwards (best-effort: a lost pointer race self-heals, because
+        ``current_version`` probes forward past the hint)."""
+        if version > self._latest_hint():
+            ltmp = self._latest_path() + f".tmp{uuid.uuid4().hex[:6]}"
+            with open(ltmp, "w") as f:
+                f.write(f"v{version:06d}")
+            os.replace(ltmp, self._latest_path())
+
     def current_version(self) -> int | None:
         """Latest committed version. The LATEST pointer is a HINT: the
         manifest claim (``_commit_manifest``'s exclusive link) is the
@@ -389,11 +427,7 @@ class SnapshotTable:
         observed vN), so the manifest chain is contiguous: probing
         FORWARD from the hint self-heals any lag at one extra stat per
         call in the common case (the probe misses immediately)."""
-        try:
-            with open(self._latest_path()) as f:
-                v = int(f.read().strip().lstrip("v"))
-        except FileNotFoundError:
-            v = -1
+        v = self._latest_hint()
         mdir = os.path.join(self.root, "manifests")
         while os.path.exists(os.path.join(mdir, f"v{v + 1:06d}.json")):
             v += 1
@@ -490,7 +524,7 @@ class SnapshotTable:
         m = self.manifest()
         if not m:
             return None
-        return T.StructType.fromJson(json.loads(m["schema"]))
+        return _schema_of(m)
 
     def lineage(self) -> list[dict]:
         """Per-commit lineage rows across all versions (metrics surface).
@@ -575,7 +609,7 @@ class SnapshotTable:
         shuffle O(matched keys) instead of O(scanned rows) (Catalyst
         does not push a LeftSemi through the Aggregate on its own)."""
         m = self.manifest(version)
-        schema = T.StructType.fromJson(json.loads(m["schema"])) if m else None
+        schema = _schema_of(m) if m else None
         if m is None or (not m["buckets"] and not m.get("global_deltas")):
             return self._empty(schema)
         all_buckets = (
@@ -690,7 +724,7 @@ class SnapshotTable:
             # (inserts as deletes) — e.g. a consumer bookmark that
             # outlived a table reset, or swapped arguments
             raise ValueError(f"v_from {v_from} > v_to {v_to}")
-        schema = T.StructType.fromJson(json.loads(m_to["schema"]))
+        schema = _schema_of(m_to)
         payload = [
             f.name
             for f in self._data_schema(schema).fields
@@ -737,10 +771,7 @@ class SnapshotTable:
 
                 added_bytes = sum(_dir_bytes(d) for d in added_g)
                 if narrow != "on":
-                    table_dirs = {
-                        d for dirs in tb.values() for d in dirs
-                    } | set(m_to.get("global_deltas", []))
-                    table_bytes = sum(_dir_bytes(d) for d in table_dirs)
+                    table_bytes = sum(_dir_bytes(d) for d in _live_dirs(m_to))
                     narrow_ok = added_bytes * 8 < table_bytes
             if narrow_ok:
                 # One bounded job: distinct (key, bucket) pairs of the
@@ -1026,20 +1057,14 @@ class SnapshotTable:
         tombstone, or erased PII resurrects on replay. The global seq
         probe is a raw unresolved scan of ONLY the ``_seq`` column
         (column-pruned parquet footers + one max), cheap next to the
-        row read. Value-clustered tables (bucket_col != key_col) fall
-        back to the full row scan, like ``lookup``."""
+        row read, which is ``lookup``'s (value-clustered tables fall
+        back to the full row scan there)."""
         epoch_id = str(epoch_id)
         if self.has_epoch(epoch_id):
             return {"epoch_id": epoch_id, "skipped": True}
-        buckets = (
-            self.buckets_for(keys) if self.bucket_col == self.key_col else None
-        )
         seq = self._next_seq()
         rows = (
-            self.read(buckets=buckets)
-            .filter(F.col(self.key_col).isin(*keys))
-            .filter(~F.coalesce(F.col(self.DEL_COL), F.lit(False)))
-            .drop(self.SEQ_COL, self.DEL_COL, self.BUCKET_COL)
+            self.lookup(keys)
             .withColumn("op", F.lit("delete"))
             .withColumn("seq", F.lit(seq).cast("long"))
         )
@@ -1166,7 +1191,8 @@ class SnapshotTable:
         payload_schema = T.StructType(
             [f for f in reduced.schema.fields if f.name not in ("op", "seq", "batch_id")]
         )
-        old_schema = self.schema()
+        m_entry = self.manifest()
+        old_schema = _schema_of(m_entry) if m_entry else None
         schema = (
             unify_schemas(old_schema, payload_schema) if old_schema else payload_schema
         )
@@ -1192,69 +1218,9 @@ class SnapshotTable:
         # adopt a concurrently-evolved bucket count BEFORE hashing: a
         # rebucket committed by another handle since this one was opened
         # would otherwise assign rows under the stale count
-        m_entry = self.manifest()
         if m_entry is not None and "n_buckets" in m_entry:
             self.n_buckets = int(m_entry["n_buckets"])
         batch = reduced.withColumn(self.BUCKET_COL, self.bucket_expr())
-        if self.mode == "mor":
-            # MOR needs no up-front bucket discovery: the delta lands next
-            # to existing data, and written buckets are read off the commit
-            # dir listing afterwards. Zero extra jobs per epoch.
-            affected = None
-        elif affected is None:
-            affected = sorted(
-                r[0] for r in batch.select(self.BUCKET_COL).distinct().collect()
-            )
-        else:
-            affected = sorted(int(b) for b in affected)
-        if affected is not None and not affected:
-            # empty COW batch: commit the epoch id only (no data); rebase
-            # freely on a lost version race — there is no read set
-            for _ in range(16):
-                # ONE manifest snapshot per attempt (see _merge_mor_append):
-                # ledger and version derive from the SAME read, and the
-                # claim targets snapshot.version + 1 exactly so any
-                # intervening commit forces a conflict instead of being
-                # silently dropped by a fresher version number
-                old_m = self.manifest()
-                ledger = (
-                    EpochLedger(old_m["committed_epochs"]) if old_m else EpochLedger()
-                )
-                if epoch_id in ledger:
-                    return {"epoch_id": epoch_id, "skipped": True}
-                ledger.add(epoch_id)
-                lineage = {
-                    "epoch_id": epoch_id,
-                    "version": old_m["version"] + 1 if old_m else 0,
-                    "affected_buckets": [],
-                    "written_buckets": [],
-                    "keys_considered": 0,
-                    "keys_deleted": 0,
-                }
-                # commit the CURRENT schema (winner's evolution preserved);
-                # an empty batch contributes no columns of its own
-                cur_schema = (
-                    T.StructType.fromJson(json.loads(old_m["schema"]))
-                    if old_m
-                    else schema
-                )
-                if old_m is not None and "n_buckets" in old_m:
-                    self.n_buckets = int(old_m["n_buckets"])  # empty: no rows hashed
-                try:
-                    self._commit_manifest(
-                        lineage["version"],
-                        cur_schema,
-                        dict(old_m["buckets"]) if old_m else {},
-                        ledger,
-                        lineage,
-                    )
-                    return lineage
-                except CommitConflictError:
-                    continue
-            raise CommitConflictError(
-                f"epoch {epoch_id!r}: lost the version race 16 times in a row"
-            )
-
         # Unified arms: (payload..., __seq, __bucket, __op, __side).
         # __side breaks exact-seq ties in favor of the incoming batch, which
         # is safe because an equal seq can only be the same event replayed.
@@ -1275,15 +1241,26 @@ class SnapshotTable:
             ext_schema,
         )
         if self.mode == "mor":
-            return self._merge_mor_append(
-                b_arm, schema, epoch_id, pre_commit=pre_commit
+            # MOR needs no up-front bucket discovery: the delta lands next
+            # to existing data. Zero extra jobs per epoch.
+            return self._merge_mor_append(b_arm, schema, epoch_id, pre_commit)
+
+        if affected is None:
+            affected = sorted(
+                r[0] for r in batch.select(self.BUCKET_COL).distinct().collect()
             )
+        else:
+            affected = sorted(int(b) for b in affected)
+        if not affected:
+            lineage_keys = {"affected_buckets": [], "written_buckets": [],
+                            "keys_considered": 0, "keys_deleted": 0}
+            return self._commit_epoch_only(epoch_id, schema, lineage_keys)
         # COW merges against the current target rows of the affected
         # buckets; the resulting commit REPLACES those buckets. The read
         # is PINNED to the manifest observed here: this read set (the
-        # affected buckets' dir lists + the global delta chain) is what
-        # the commit loop below validates against the then-current
-        # manifest to decide whether a lost version race is rebaseable.
+        # affected buckets' dir lists + the global delta chain + the
+        # bucket count) is what decides whether a lost version race is
+        # rebaseable.
         read_m = self.manifest()
         target = self.read(
             version=read_m["version"] if read_m else None, buckets=affected
@@ -1348,22 +1325,8 @@ class SnapshotTable:
         new_rows = observed.withColumn(
             self.DEL_COL, F.col("__op") == "delete"
         ).drop("__op")
-
-        version = (read_m["version"] + 1) if read_m else 0
-        tag = "".join(ch for ch in epoch_id if ch.isalnum())[-24:] or "e"
-        # attempt-unique dir (see _merge_mor_append): concurrent writers
-        # never share a data directory; losers leave vacuumable orphans
-        commit_rel = os.path.join(
-            "commits", f"c_{version:06d}_{tag}_{uuid.uuid4().hex[:6]}"
-        )
-        commit_abs = os.path.join(self.root, commit_rel)
-        n_out = len(affected) if affected else self.n_buckets
-        (
-            new_rows.repartition(max(n_out, 1), F.col(self.BUCKET_COL))
-            .write.mode("overwrite")
-            .partitionBy(self.BUCKET_COL)
-            .parquet(commit_abs)
-        )
+        commit_rel = self._commit_dir(_next_version(read_m), epoch_id)
+        written = sorted(self._write_bucketed(new_rows, len(affected), commit_rel))
         metrics_row = observation.get
         if pre_commit is not None:
             # transactional DQ gate: raises -> the manifest below is never
@@ -1371,90 +1334,45 @@ class SnapshotTable:
             # and the epoch stays uncommitted. The gate's aggregates were
             # observed during the write job itself — zero extra scans.
             pre_commit()
-        written_buckets = set()
-        for d in os.listdir(commit_abs):
-            if d.startswith(f"{self.BUCKET_COL}="):
-                written_buckets.add(int(d.split("=", 1)[1]))
+        # JSON string: lineage() rows stay flat enough for
+        # spark.createDataFrame (nested variant maps break inference)
+        partition_rows = json.dumps(
+            _partition_rows(os.path.join(self.root, commit_rel))
+        )
 
-        # only COW reaches this point (MOR returned via _merge_mor_append)
-        partition_rows = json.dumps(_partition_rows(commit_abs))
-        # commit with validate-or-rebase: a COW rewrite baked the READ SET
-        # (the affected buckets as of read_m + the then-current delta
-        # chain) into its data files. Losing the version race is
-        # rebaseable ONLY if the winners did not change that read set —
-        # same buckets' dir lists, same global deltas, same bucket count.
-        # Otherwise the rewrite is stale: raise with the epoch
-        # UNCOMMITTED (the data dir is a vacuumable orphan) and let the
-        # caller re-run the merge against fresh state.
-        read_gd = list(read_m.get("global_deltas", [])) if read_m else []
-        read_bk = {
-            str(b): (read_m["buckets"].get(str(b)) if read_m else None)
-            for b in affected
-        }
-        read_nb = int(read_m["n_buckets"]) if read_m else self.n_buckets
-        for _ in range(16):
-            # ONE manifest snapshot per attempt (see _merge_mor_append)
-            old_m = self.manifest()
-            committed = (
-                EpochLedger(old_m["committed_epochs"]) if old_m else EpochLedger()
+        def read_set(m: dict | None) -> tuple:
+            return (
+                list(m.get("global_deltas", [])) if m else [],
+                {str(b): (m["buckets"].get(str(b)) if m else None) for b in affected},
+                int(m["n_buckets"]) if m else self.n_buckets,
             )
-            if epoch_id in committed:
-                shutil.rmtree(commit_abs, ignore_errors=True)
-                return {"epoch_id": epoch_id, "skipped": True}
-            committed.add(epoch_id)
-            if (old_m["version"] if old_m else None) != (
-                read_m["version"] if read_m else None
-            ):
-                now_gd = list(old_m.get("global_deltas", [])) if old_m else []
-                now_bk = {
-                    str(b): (old_m["buckets"].get(str(b)) if old_m else None)
-                    for b in affected
-                }
-                now_nb = int(old_m["n_buckets"]) if old_m else self.n_buckets
-                if (now_gd, now_bk, now_nb) != (read_gd, read_bk, read_nb):
-                    raise CommitConflictError(
-                        f"epoch {epoch_id!r}: a concurrent commit changed "
-                        f"this COW merge's read set (buckets {affected}); "
-                        "the epoch is uncommitted — re-run the merge"
-                    )
-            # re-unify against the winner's schema: a rebase-eligible
-            # intervening commit (e.g. a schema-evolving EMPTY epoch)
-            # must not have its evolution dropped by our pre-race schema
-            if old_m is not None:
-                schema = unify_schemas(
-                    T.StructType.fromJson(json.loads(old_m["schema"])), schema
+
+        pinned = read_set(read_m)
+
+        def attempt(old_m: dict | None, version: int) -> tuple:
+            if read_set(old_m) != pinned:
+                raise CommitConflictError(
+                    f"epoch {epoch_id!r}: a concurrent commit changed "
+                    f"this COW merge's read set (buckets {affected}); "
+                    "the epoch is uncommitted — re-run the merge"
                 )
-            buckets_map = (
-                {k: list(v) for k, v in old_m["buckets"].items()} if old_m else {}
-            )
+            buckets_map = dict(old_m["buckets"]) if old_m else {}
             for b in affected:
                 buckets_map.pop(str(b), None)
-            for b in written_buckets:
+            for b in written:
                 buckets_map[str(b)] = [commit_rel]
-            version = old_m["version"] + 1 if old_m else 0
-            lineage = {
+            return schema, buckets_map, None, {
                 "epoch_id": epoch_id,
                 "version": version,
                 "mode": self.mode,
-                "affected_buckets": affected if affected is not None else sorted(written_buckets),
-                "written_buckets": sorted(written_buckets),
+                "affected_buckets": affected,
+                "written_buckets": written,
                 "keys_considered": metrics_row["keys_considered"] if metrics_row else None,
                 "keys_deleted": metrics_row["keys_deleted"] if metrics_row else None,
-                # JSON string: lineage() rows stay flat enough for
-                # spark.createDataFrame (nested variant maps break inference)
                 "partition_rows": partition_rows,
             }
-            try:
-                self._commit_manifest(
-                    version, schema, buckets_map, committed, lineage,
-                    new_dir=commit_rel, new_dir_kind="base",
-                )
-                return lineage
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"epoch {epoch_id!r}: lost the version race 16 times in a row"
-        )
+
+        return self._commit_optimistic(attempt, epoch_id, new_dir=commit_rel)
 
     def _merge_mor_append(
         self,
@@ -1482,18 +1400,7 @@ class SnapshotTable:
             F.count(F.lit(1)).alias("keys_considered"),
             F.count_if(F.col(self.DEL_COL)).alias("keys_deleted"),
         )
-        # version here names the data dir only (cosmetic): the COMMIT
-        # version is re-derived per attempt inside the retry loop below
-        m0 = self.manifest()
-        version = m0["version"] + 1 if m0 else 0
-        tag = "".join(ch for ch in epoch_id if ch.isalnum())[-24:] or "e"
-        # attempt-unique dir: two workers retrying the SAME epoch must not
-        # interleave writes into one directory (the loser's manifest claim
-        # fails and its dir stays an unreferenced, vacuumable orphan; dir
-        # names are opaque — manifests reference them by relative path)
-        commit_rel = os.path.join(
-            "commits", f"c_{version:06d}_{tag}_{uuid.uuid4().hex[:6]}"
-        )
+        commit_rel = self._commit_dir(_next_version(self.manifest()), epoch_id)
         commit_abs = os.path.join(self.root, commit_rel)
         # UNPARTITIONED delta: zero shuffle AND zero partition fan-out
         # (partitionBy from an unshuffled input would create
@@ -1503,8 +1410,7 @@ class SnapshotTable:
         metrics_row = observation.get
         if pre_commit is not None:
             pre_commit()
-        empty = bool(metrics_row) and metrics_row["keys_considered"] == 0
-        if empty:
+        if metrics_row and metrics_row["keys_considered"] == 0:
             # fully-quarantined / empty epoch: commit the epoch id WITHOUT
             # growing the delta chain — a zero-row delta would still count
             # toward read amplification and maybe_compact's trigger. The
@@ -1512,72 +1418,20 @@ class SnapshotTable:
             # already ran, so this costs no extra scan (COW has the same
             # short-circuit up front via its affected-bucket probe).
             shutil.rmtree(commit_abs, ignore_errors=True)
-        partition_rows = None if empty else json.dumps(_partition_rows(commit_abs))
-        # commit with rebase-on-conflict: a MOR delta is position-
-        # independent (the LWW resolve is order-free), so losing the
-        # version race to ANY other commit just means re-deriving the
-        # manifest contents from the winner's state and claiming the next
-        # version. Data files are never rewritten on rebase.
-        for _ in range(16):
-            # ONE manifest snapshot per attempt: ledger, bucket map, delta
-            # chain, and version must all come from the SAME manifest — two
-            # separate reads could straddle a concurrent commit and write a
-            # new manifest whose ledger misses the winner's epoch (silent
-            # exactly-once violation) or whose chain drops its delta
-            old_m = self.manifest()
-            committed = (
-                EpochLedger(old_m["committed_epochs"]) if old_m else EpochLedger()
-            )
-            if epoch_id in committed:
-                # a concurrent twin committed this very epoch first:
-                # exactly-once wins, our data dir becomes an orphan
-                shutil.rmtree(commit_abs, ignore_errors=True)
-                return {"epoch_id": epoch_id, "skipped": True}
-            committed.add(epoch_id)
+            lineage_keys = {"mode": "mor", "rows_in_batch": 0, "delete_rows": 0}
+            return self._commit_epoch_only(epoch_id, schema, lineage_keys)
+        partition_rows = json.dumps(_partition_rows(commit_abs))
+
+        def attempt(old_m: dict | None, version: int) -> tuple:
             if old_m is not None and int(old_m["n_buckets"]) != self.n_buckets:
-                # a concurrent rebucket changed the hash function: adopt
-                # the evolved count. An EMPTY epoch commits no data and
-                # can proceed; a real delta's _bucket values were
-                # computed under the OLD count, so rebasing would poison
-                # bucket pruning — make the caller re-run the merge
-                # (rows re-hash on the retry).
                 self.n_buckets = int(old_m["n_buckets"])
-                if not empty:
-                    shutil.rmtree(commit_abs, ignore_errors=True)
-                    raise CommitConflictError(
-                        f"epoch {epoch_id!r}: the table was rebucketted "
-                        "concurrently — re-run the merge"
-                    )
-            # re-unify against the WINNER's schema: rebasing with the
-            # pre-race schema would silently drop a concurrent commit's
-            # schema evolution (its columns vanish from the read schema)
-            if old_m is not None:
-                schema = unify_schemas(
-                    T.StructType.fromJson(json.loads(old_m["schema"])), schema
+                shutil.rmtree(commit_abs, ignore_errors=True)
+                raise CommitConflictError(
+                    f"epoch {epoch_id!r}: the table was rebucketted "
+                    "concurrently — re-run the merge"
                 )
-            buckets_map = (
-                {k: list(v) for k, v in old_m["buckets"].items()} if old_m else {}
-            )
             global_deltas = list(old_m.get("global_deltas", [])) if old_m else []
-            version = old_m["version"] + 1 if old_m else 0
-            if empty:
-                lineage = {
-                    "epoch_id": epoch_id,
-                    "version": version,
-                    "mode": "mor",
-                    "rows_in_batch": 0,
-                    "delete_rows": 0,
-                }
-                try:
-                    self._commit_manifest(
-                        version, schema, buckets_map, committed, lineage,
-                        global_deltas=global_deltas,
-                    )
-                    return lineage
-                except CommitConflictError:
-                    continue
-            global_deltas.append(commit_rel)
-            lineage = {
+            return schema, None, global_deltas + [commit_rel], {
                 "epoch_id": epoch_id,
                 "version": version,
                 "mode": "mor",
@@ -1586,31 +1440,114 @@ class SnapshotTable:
                 "delete_rows": metrics_row["keys_deleted"] if metrics_row else None,
                 "partition_rows": partition_rows,
             }
+
+        return self._commit_optimistic(
+            attempt, epoch_id, new_dir=commit_rel, new_dir_kind="delta"
+        )
+
+    def _commit_epoch_only(
+        self, epoch_id: str, schema: T.StructType, lineage_keys: dict
+    ) -> dict:
+        """Commit the epoch id of a batch that wrote no data; the handle
+        adopts the winner's bucket count (no rows were hashed). A COW
+        epoch keeps the current schema (an empty batch contributes no
+        columns of its own); a MOR epoch commits the unified ``schema``."""
+
+        def attempt(old_m: dict | None, version: int) -> tuple:
+            if old_m is not None and "n_buckets" in old_m:
+                self.n_buckets = int(old_m["n_buckets"])
+            own = T.StructType([]) if old_m and self.mode == "cow" else schema
+            lineage = {"epoch_id": epoch_id, "version": version, **lineage_keys}
+            return own, None, None, lineage
+
+        return self._commit_optimistic(attempt, epoch_id)
+
+    def _commit_optimistic(
+        self,
+        build_attempt,
+        epoch_id: str | None = None,
+        new_dir: str | None = None,
+        new_dir_kind: str = "base",
+    ) -> dict:
+        """The one optimistic-commit loop every writer goes through;
+        returns the committed lineage.
+
+        Each attempt takes ONE manifest snapshot ``old_m``: ledger,
+        buckets, delta chain, schema and version all derive from it, so a
+        new manifest can never straddle a concurrent commit and drop the
+        winner's epoch or delta. A merge (``epoch_id`` given) whose epoch
+        a twin already committed removes its data dir ``new_dir`` and
+        returns ``{"epoch_id", "skipped": True}``. Otherwise
+        ``build_attempt(old_m, version)`` applies the op's rebase rule
+        and returns ``(schema, buckets_map, global_deltas, lineage)``
+        (None carries the map or chain over). The schema is unified with
+        the winner's, so a rebase never drops its schema evolution, and
+        ``_commit_manifest`` claims exactly ``old_m.version + 1``. A lost
+        claim re-runs the attempt against the new winner, at most
+        ``COMMIT_ATTEMPTS`` times.
+
+        Rebase rules — where one forbids the rebase, ``build_attempt``
+        raises ``CommitConflictError`` and the op must be re-run against
+        fresh state (Iceberg's validation semantics):
+
+          * COW merge: only if its read set (the affected buckets' dir
+            lists, the delta chain, the bucket count) is unchanged.
+          * MOR append: always (LWW is order-free), except over a
+            concurrent rebucket — its ``_bucket`` values were hashed
+            under the old count.
+          * empty epoch, either mode: always; it commits the ledger only.
+          * compaction and minor compaction: over MOR appends (their
+            deltas stay on top of the rewrite), but not over a changed
+            bucket map or bucket count, nor once a concurrent compaction
+            folded any of the op's input deltas.
+          * rebucket: never — it changes the hash function itself.
+        """
+        for _ in range(COMMIT_ATTEMPTS):
+            old_m = self.manifest()
+            ledger = EpochLedger(old_m["committed_epochs"]) if old_m else EpochLedger()
+            if epoch_id is not None:
+                if epoch_id in ledger:
+                    if new_dir is not None:
+                        shutil.rmtree(
+                            os.path.join(self.root, new_dir), ignore_errors=True
+                        )
+                    return {"epoch_id": epoch_id, "skipped": True}
+                ledger.add(epoch_id)
+            schema, buckets_map, global_deltas, lineage = build_attempt(
+                old_m, _next_version(old_m)
+            )
+            if old_m is not None:
+                schema = unify_schemas(_schema_of(old_m), schema)
             try:
                 self._commit_manifest(
-                    version, schema, buckets_map, committed, lineage,
-                    new_dir=commit_rel, new_dir_kind="delta",
+                    old_m, schema, buckets_map, ledger, lineage,
+                    new_dir=new_dir, new_dir_kind=new_dir_kind,
                     global_deltas=global_deltas,
                 )
                 return lineage
             except CommitConflictError:
                 continue
         raise CommitConflictError(
-            f"epoch {epoch_id!r}: lost the version race 16 times in a row"
+            f"{lineage['epoch_id']!r}: lost the version race "
+            f"{COMMIT_ATTEMPTS} times in a row"
         )
 
     def _commit_manifest(
         self,
-        version: int,
+        old_m: dict | None,
         schema: T.StructType,
-        buckets_map: dict,
+        buckets_map: dict | None,
         committed: EpochLedger,
         lineage: dict,
         new_dir: str | None = None,
         new_dir_kind: str = "base",
         global_deltas: list[str] | None = None,
     ) -> None:
-        old_m = self.manifest()
+        """Write the manifest of version ``old_m.version + 1`` and claim
+        it exclusively (``CommitConflictError`` if another writer did)."""
+        version = _next_version(old_m)
+        if buckets_map is None:
+            buckets_map = old_m["buckets"] if old_m else {}
         if global_deltas is None:
             global_deltas = list(old_m.get("global_deltas", [])) if old_m else []
         live = {d for dirs in buckets_map.values() for d in dirs} | set(global_deltas)
@@ -1645,11 +1582,7 @@ class SnapshotTable:
             "global_deltas": global_deltas,
             "dir_kinds": kinds,
             "dir_bytes": dir_bytes,
-            "committed_epochs": (
-                committed.to_json()
-                if isinstance(committed, EpochLedger)
-                else committed
-            ),
+            "committed_epochs": committed.to_json(),
             "lineage": lineage,
         }
         mpath = os.path.join(self.root, "manifests", f"v{version:06d}.json")
@@ -1670,46 +1603,52 @@ class SnapshotTable:
             )
         finally:
             os.unlink(tmp)
-        # LATEST advance (monotone best-effort: the pointer is a hint and
-        # current_version() probes forward past it, so a lost pointer
-        # race self-heals; never move the hint backwards)
-        try:
-            with open(self._latest_path()) as f:
-                hint = int(f.read().strip().lstrip("v"))
-        except FileNotFoundError:
-            hint = -1
-        if version > hint:
-            ltmp = self._latest_path() + f".tmp{uuid.uuid4().hex[:6]}"
-            with open(ltmp, "w") as f:
-                f.write(f"v{version:06d}")
-            os.replace(ltmp, self._latest_path())
+        self._advance_latest(version)
 
     # ---------------------------------------------------------- maintenance
+
+    def _commit_dir(self, version: int, label: str) -> str:
+        """Attempt-unique data dir for a commit expected at ``version``:
+        writers never share one (a loser's stays a vacuumable orphan).
+        The version in the name is cosmetic; manifests hold the path."""
+        tag = "".join(ch for ch in label if ch.isalnum())[-24:] or "e"
+        return os.path.join("commits", f"c_{version:06d}_{tag}_{uuid.uuid4().hex[:6]}")
+
+    def _write_bucketed(
+        self,
+        df: DataFrame,
+        n_parts: int,
+        commit_rel: str,
+        sort_within_buckets: bool = False,
+    ) -> list[int]:
+        """Write ``df`` into one ``_bucket=<k>`` dir per bucket under
+        ``commit_rel``; returns the bucket ids written (listing order)."""
+        out = df.repartition(n_parts, F.col(self.BUCKET_COL))
+        if sort_within_buckets:
+            out = out.sortWithinPartitions(self.BUCKET_COL, self.key_col)
+        commit_abs = os.path.join(self.root, commit_rel)
+        out.write.mode("overwrite").partitionBy(self.BUCKET_COL).parquet(commit_abs)
+        prefix = f"{self.BUCKET_COL}="
+        return [
+            int(d[len(prefix):]) for d in os.listdir(commit_abs) if d.startswith(prefix)
+        ]
 
     def _commit_rewrite(
         self,
         read_m: dict,
-        schema: T.StructType,
-        buckets_map: dict,
-        folded: set,
+        buckets_map: dict | None,
         lineage_base: dict,
         commit_rel: str,
         own_delta: bool = False,
     ) -> dict:
-        """Commit a maintenance rewrite (full or minor compaction) with
-        rebase over intervening MOR appends: appenders only EXTEND the
-        global delta chain, so the rewrite stays valid — keep the
-        interveners' deltas (everything not in ``folded``) on top of the
-        rewritten files, take the fresh epoch ledger, claim the next
-        version. A concurrent commit that changed the BUCKET MAP
-        (another compaction, a COW merge, a rebucket) invalidated the
-        rewrite's read set: raise, leaving the written dir a vacuumable
-        orphan — re-running the maintenance op is always safe."""
-        for _ in range(16):
-            old_m = self.manifest()
-            if old_m["version"] != read_m["version"] and (
-                old_m["buckets"] != read_m["buckets"]
-                or int(old_m["n_buckets"]) != int(read_m["n_buckets"])
+        """Commit a maintenance rewrite (full or minor compaction) of the
+        state at ``read_m`` that folded its whole delta chain; the rebase
+        rule is in ``_commit_optimistic``."""
+        folded = set(read_m.get("global_deltas", []))
+
+        def attempt(old_m: dict, version: int) -> tuple:
+            if (old_m["buckets"], int(old_m["n_buckets"])) != (
+                read_m["buckets"], int(read_m["n_buckets"])
             ):
                 raise CommitConflictError(
                     f"{lineage_base.get('epoch_id')}: a concurrent commit "
@@ -1726,33 +1665,17 @@ class SnapshotTable:
                     f"{lineage_base.get('epoch_id')}: a concurrent "
                     "compaction folded this op's input deltas — re-run it"
                 )
-            # winner's schema evolution survives the rebase
-            out_schema = unify_schemas(
-                T.StructType.fromJson(json.loads(old_m["schema"])), schema
-            )
             survivors = [
                 d for d in old_m.get("global_deltas", []) if d not in folded
             ]
-            global_deltas = (
-                [commit_rel] + survivors if own_delta else survivors
-            )
-            lineage = dict(lineage_base, version=old_m["version"] + 1)
-            try:
-                self._commit_manifest(
-                    lineage["version"], out_schema, buckets_map,
-                    # ledger from the SAME snapshot as version/chain (a
-                    # separate read could straddle a concurrent commit
-                    # and drop its epoch from the new manifest)
-                    EpochLedger(old_m["committed_epochs"]), lineage,
-                    new_dir=commit_rel,
-                    new_dir_kind="delta" if own_delta else "base",
-                    global_deltas=global_deltas,
-                )
-                return lineage
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"{lineage_base.get('epoch_id')}: lost the version race 16 times"
+            global_deltas = [commit_rel] + survivors if own_delta else survivors
+            lineage = dict(lineage_base, version=version)
+            return _schema_of(read_m), buckets_map, global_deltas, lineage
+
+        return self._commit_optimistic(
+            attempt,
+            new_dir=commit_rel,
+            new_dir_kind="delta" if own_delta else "base",
         )
 
     def compact(
@@ -1788,7 +1711,6 @@ class SnapshotTable:
         m = self.manifest()
         if m is None:
             return {"skipped": True}
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
         df = self.read(version=m["version"])
         if purge_tombstones_below_seq is not None:
             df = df.filter(
@@ -1797,29 +1719,13 @@ class SnapshotTable:
                     & (F.col(self.SEQ_COL) < purge_tombstones_below_seq)
                 )
             )
-        version = m["version"] + 1
-        commit_rel = os.path.join(
-            "commits", f"c_{version:06d}_compact_{uuid.uuid4().hex[:6]}"
+        commit_rel = self._commit_dir(_next_version(m), "compact")
+        written = self._write_bucketed(
+            df, self.n_buckets, commit_rel, sort_within_buckets
         )
-        commit_abs = os.path.join(self.root, commit_rel)
-        out = df.repartition(self.n_buckets, F.col(self.BUCKET_COL))
-        if sort_within_buckets:
-            out = out.sortWithinPartitions(self.BUCKET_COL, self.key_col)
-        (
-            out.write.mode("overwrite")
-            .partitionBy(self.BUCKET_COL)
-            .parquet(commit_abs)
-        )
-        buckets_map = {
-            d.split("=", 1)[1]: [commit_rel]
-            for d in os.listdir(commit_abs)
-            if d.startswith(f"{self.BUCKET_COL}=")
-        }
-        folded = set(m.get("global_deltas", []))
         return self._commit_rewrite(
-            m, schema, buckets_map, folded,
-            {"epoch_id": "__compaction", "compaction": True},
-            commit_rel,
+            m, {str(b): [commit_rel] for b in written},
+            {"epoch_id": "__compaction", "compaction": True}, commit_rel,
         )
 
     def rebucket(self, n_buckets: int, sort_within_buckets: bool = False) -> dict:
@@ -1849,7 +1755,6 @@ class SnapshotTable:
             return {"skipped": True, "n_buckets": self.n_buckets}
         if int(n_buckets) == self.n_buckets:
             return {"skipped": True, "n_buckets": self.n_buckets}
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
         df = self.read(version=m["version"])
         old_n = self.n_buckets
         self.n_buckets = int(n_buckets)
@@ -1857,40 +1762,32 @@ class SnapshotTable:
             df = df.drop(self.BUCKET_COL).withColumn(
                 self.BUCKET_COL, self.bucket_expr()
             )
-            # a rebucket changes the hash function itself, so ANY
-            # concurrent commit invalidates it: the claim targets exactly
-            # m.version + 1, so an intervening commit forces
-            # CommitConflictError and the op must be re-run (stop-the-
-            # world by design; appenders can keep running and simply win
-            # the race)
-            version = m["version"] + 1
-            commit_rel = os.path.join(
-                "commits", f"c_{version:06d}_rebucket_{uuid.uuid4().hex[:6]}"
-            )
-            commit_abs = os.path.join(self.root, commit_rel)
-            out = df.repartition(self.n_buckets, F.col(self.BUCKET_COL))
-            if sort_within_buckets:
-                out = out.sortWithinPartitions(self.BUCKET_COL, self.key_col)
-            (
-                out.write.mode("overwrite")
-                .partitionBy(self.BUCKET_COL)
-                .parquet(commit_abs)
-            )
+            version = _next_version(m)
+            commit_rel = self._commit_dir(version, "rebucket")
             buckets_map = {
-                d.split("=", 1)[1]: [commit_rel]
-                for d in os.listdir(commit_abs)
-                if d.startswith(f"{self.BUCKET_COL}=")
+                str(b): [commit_rel]
+                for b in self._write_bucketed(
+                    df, self.n_buckets, commit_rel, sort_within_buckets
+                )
             }
             lineage = {
                 "epoch_id": "__rebucket",
                 "version": version,
                 "rebucket": {"from": old_n, "to": self.n_buckets},
             }
-            self._commit_manifest(
-                version, schema, buckets_map,
-                EpochLedger(m["committed_epochs"]), lineage,
-                new_dir=commit_rel, new_dir_kind="base", global_deltas=[],
-            )
+
+            def attempt(old_m: dict, _version: int) -> tuple:
+                # stop-the-world by design: appenders keep running and
+                # simply win the race; the rebucket is then re-run
+                if old_m["version"] != m["version"]:
+                    raise CommitConflictError(
+                        "__rebucket: a concurrent commit landed during the "
+                        "rebucket — re-run it"
+                    )
+                # m's schema unchanged; every pending delta is folded
+                return T.StructType([]), buckets_map, [], lineage
+
+            return self._commit_optimistic(attempt, new_dir=commit_rel)
         except BaseException:
             # ANY failure before the manifest claim lands (write error,
             # version conflict, interrupt) leaves the on-disk table at
@@ -1899,7 +1796,6 @@ class SnapshotTable:
             # count and COW would miss stored rows (duplicate live rows)
             self.n_buckets = old_n
             raise
-        return lineage
 
     def compact_minor(self) -> dict:
         """Minor compaction (Hudi-style): collapse the pending DELTA CHAIN
@@ -1916,24 +1812,19 @@ class SnapshotTable:
         gdeltas = m.get("global_deltas", []) if m else []
         if m is None or len(gdeltas) < 2:
             return {"skipped": True}
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        schema = _schema_of(m)
         ddf = self.spark.read.schema(self._data_schema(schema)).parquet(
             *[os.path.join(self.root, d) for d in gdeltas]
         )
         ddf = conform(ddf, self._data_schema(schema))
         merged = self._resolve(ddf, schema)
-        commit_rel = os.path.join(
-            "commits",
-            f"c_{m['version'] + 1:06d}_minor_{uuid.uuid4().hex[:6]}",
-        )
-        commit_abs = os.path.join(self.root, commit_rel)
-        merged.write.mode("overwrite").parquet(commit_abs)
+        commit_rel = self._commit_dir(_next_version(m), "minor")
+        merged.write.mode("overwrite").parquet(os.path.join(self.root, commit_rel))
         # rebase-safe like compact(): deltas appended by concurrent MOR
-        # writers survive AFTER the merged delta (resolve is order-free)
+        # writers survive AFTER the merged delta (resolve is order-free);
+        # the bucket map carries over unchanged
         return self._commit_rewrite(
-            m, schema,
-            {k: list(v) for k, v in m["buckets"].items()},
-            set(gdeltas),
+            m, None,
             {"epoch_id": "__minor_compaction", "minor_compaction": True,
              "deltas_merged": len(gdeltas)},
             commit_rel,
@@ -1990,16 +1881,7 @@ class SnapshotTable:
         # heal the LATEST hint first: a lost pointer race can leave it
         # below cur, and trimming manifests in the gap ABOVE a stale hint
         # would break current_version()'s contiguous forward probe
-        try:
-            with open(self._latest_path()) as f:
-                hint = int(f.read().strip().lstrip("v"))
-        except FileNotFoundError:
-            hint = -1
-        if hint < cur:
-            ltmp = self._latest_path() + f".tmp{uuid.uuid4().hex[:6]}"
-            with open(ltmp, "w") as f:
-                f.write(f"v{cur:06d}")
-            os.replace(ltmp, self._latest_path())
+        self._advance_latest(cur)
         horizon = cur - max(1, keep_last) + 1
         mdir = os.path.join(self.root, "manifests")
         mcutoff = time.time() - older_than_s
@@ -2015,29 +1897,11 @@ class SnapshotTable:
                 except FileNotFoundError:
                     continue
             if keep:
-                m = self.manifest(v)
-                live |= {d for dirs in m["buckets"].values() for d in dirs}
-                live |= set(m.get("global_deltas", []))
+                live |= _live_dirs(self.manifest(v))
             else:
                 os.remove(os.path.join(mdir, name))
                 out["removed_manifests"].append(name)
-        cdir = os.path.join(self.root, "commits")
-        # a table whose only committed epochs were empty has manifests but
-        # no commits dir (the empty-batch path commits a manifest without
-        # ever writing commit data) — nothing to expire there
-        cutoff = time.time() - older_than_s
-        for d in os.listdir(cdir) if os.path.isdir(cdir) else []:
-            rel = os.path.join("commits", d)
-            path = os.path.join(cdir, d)
-            if rel in live:
-                continue
-            try:
-                if older_than_s > 0 and os.path.getmtime(path) > cutoff:
-                    continue  # possibly an in-flight commit: keep
-            except FileNotFoundError:
-                continue
-            shutil.rmtree(path)
-            out["removed_commits"].append(rel)
+        out["removed_commits"] = self._sweep_commits(live, older_than_s)
         return out
 
     def expire_orphans(self, older_than_s: float = 0.0) -> list[str]:
@@ -2056,16 +1920,16 @@ class SnapshotTable:
         m = self.manifest()
         if m is None:
             return []
-        live = {d for dirs in m["buckets"].values() for d in dirs} | set(
-            m.get("global_deltas", [])
-        )
+        return self._sweep_commits(_live_dirs(m), older_than_s)
+
+    def _sweep_commits(self, live: set[str], older_than_s: float) -> list[str]:
+        """Remove the commit dirs not in ``live`` (and, when
+        ``older_than_s`` > 0, older than it); returns their paths. A table
+        whose only committed epochs were empty may have no commits dir."""
         removed = []
         cdir = os.path.join(self.root, "commits")
-        # same empty-epochs-only guard as expire_snapshots
-        if not os.path.isdir(cdir):
-            return removed
         cutoff = time.time() - older_than_s
-        for d in os.listdir(cdir):
+        for d in os.listdir(cdir) if os.path.isdir(cdir) else []:
             rel = os.path.join("commits", d)
             path = os.path.join(cdir, d)
             if rel in live:

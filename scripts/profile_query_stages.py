@@ -21,10 +21,10 @@ from aws_serverless_elt_pipeline_enterprise_spark.session import get_spark  # no
 
 def main() -> None:
     name = sys.argv[1]
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf1.0"
+    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     log_dir = f"/tmp/spark_evt_{os.getpid()}"
     os.makedirs(log_dir, exist_ok=True)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     spark = get_spark(
         app_name=f"profile-{name}",
         master=f"local[{cpus}]",

@@ -23,6 +23,7 @@ import os
 import pytest
 
 from aws_serverless_elt_pipeline_enterprise_spark.tableio.snapshot import (
+    COMMIT_ATTEMPTS,
     CommitConflictError,
     SnapshotTable,
 )
@@ -474,3 +475,72 @@ def test_expire_snapshots_heals_latest_and_guards_claim_markers(spark, tmp_path)
     out = t.expire_snapshots(keep_last=1, older_than_s=3600)
     assert out["removed_manifests"] == []  # all markers younger than 1h
     assert set(os.listdir(mdir)) == kept_before
+
+
+# ---- the shared optimistic-commit loop ----
+
+
+def test_rebucket_never_rebases_over_a_concurrent_append(spark, tmp_path):
+    """A rebucket changes the hash function itself, so it must NOT rebase
+    over any commit that lands while it runs — not even a MOR append,
+    which every other op rebases over. It raises, the handle keeps the
+    on-disk bucket count, the winner's epoch and state stay intact, and
+    a re-run against fresh state succeeds."""
+    t = _mk(spark, tmp_path)
+    t.merge_reduced(_batch(spark, [("insert", "a", 1, 1.0)]), "e0")
+    twin = SnapshotTable(spark, t.root, key_col="doc_id", n_buckets=4, mode="mor")
+    _interpose(
+        t,
+        lambda: twin.merge_reduced(
+            _batch(spark, [("insert", "b", 2, 2.0)]), "twin-0"
+        ),
+    )
+    with pytest.raises(CommitConflictError):
+        t.rebucket(16)
+    assert t.n_buckets == 4
+    assert t.manifest()["n_buckets"] == 4
+    assert t.has_epoch("twin-0")
+    assert _state(t) == {"a": 1.0, "b": 2.0}
+    lin = t.rebucket(16)
+    assert lin["rebucket"] == {"from": 4, "to": 16}
+    assert t.n_buckets == 16 and t.manifest()["n_buckets"] == 16
+    assert t.has_epoch("twin-0")
+    assert _state(t) == {"a": 1.0, "b": 2.0}
+
+
+@pytest.mark.parametrize(
+    "op", ["mor_merge", "cow_merge", "cow_empty_epoch", "compact", "compact_minor"]
+)
+def test_attempt_budget_enforced_on_every_commit_path(spark, tmp_path, op):
+    """Every writer gives up after exactly COMMIT_ATTEMPTS lost claims,
+    leaving the table untouched: no new version, no new epoch in the
+    ledger, the same visible state."""
+    mode = "cow" if op.startswith("cow") else "mor"
+    t = _mk(spark, tmp_path, mode=mode)
+    t.merge_reduced(_batch(spark, [("insert", "a", 1, 1.0)]), "e0")
+    t.merge_reduced(_batch(spark, [("insert", "b", 2, 2.0)]), "e1")
+    version, before = t.current_version(), _state(t)
+    claims = {"n": 0}
+
+    def lose_every_claim(*args, **kwargs):
+        claims["n"] += 1
+        raise CommitConflictError("version claimed by another writer")
+
+    t._commit_manifest = lose_every_claim
+    update = _batch(spark, [("update", "a", 3, 3.0)])
+    run = {
+        "mor_merge": lambda: t.merge_reduced(update, "e2"),
+        "cow_merge": lambda: t.merge_reduced(update, "e2"),
+        "cow_empty_epoch": lambda: t.merge_reduced(
+            _batch(spark, []), "e2", affected=[]
+        ),
+        "compact": t.compact,
+        "compact_minor": t.compact_minor,
+    }[op]
+    with pytest.raises(CommitConflictError, match="lost the version race"):
+        run()
+    assert claims["n"] == COMMIT_ATTEMPTS
+    assert not t.has_epoch("e2")
+    assert len(t.committed_epochs()) == 2
+    assert t.current_version() == version
+    assert _state(t) == before
